@@ -224,6 +224,10 @@ def minhash_lsh_candidates(
     Buckets larger than ``max_bucket`` are dropped (degenerate/boilerplate
     content): at 100 TB a single hot bucket would otherwise produce a
     quadratic pair explosion on one executor.
+
+    Precondition: ``id_col`` must be unique. Pairs form on ids alone and
+    signatures re-attach by id, so a repeated id yields self pairs
+    (id_a == id_b) and pairs scored against every signature sharing it.
     """
     # Spread first: fixture/lake files can be few huge unsplittable row
     # groups, and the signature kernel is the CPU-heavy step — spread it

@@ -254,6 +254,10 @@ def q_agg_median_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffers genuinely tiny. Values are identical: exact_percentiles
     reproduces built-in ``percentile`` bit-for-bit (pinned by
     test_exact_percentiles_match_builtin) and median == percentile(0.5).
+
+    Output contract: a group whose ``l_extendedprice`` values are all NULL
+    is dropped (exact_percentiles keeps only groups with a non-null
+    value), where a plain GROUP BY would return it with NULL medians.
     """
     from fineventstream_spark.operators.percentiles import exact_percentiles
 

@@ -34,11 +34,12 @@ def decode_envelope(df: DataFrame, payload_schema=RAW_QUOTE_SCHEMA) -> DataFrame
         F.length(F.regexp_replace("data", "[\\r\\n]", "")) % 4 == 0
     )
     payload = F.when(is_b64, F.unbase64(F.col("data")).cast("string"))
-    parsed = df.select(
-        "partition_key",
-        F.from_json(payload, payload_schema).alias("rec"),
+    rec = F.from_json(payload, payload_schema)
+    # Generate, not Project+Filter: later predicates are not pushed below a
+    # Generate, so Catalyst cannot re-inline the decode into each conjunct.
+    return df.select(
+        "partition_key", F.inline(F.filter(F.array(rec), lambda r: r.isNotNull()))
     )
-    return parsed.filter(F.col("rec").isNotNull()).select("partition_key", "rec.*")
 
 
 def filter_valid_quotes(df: DataFrame) -> DataFrame:
@@ -77,24 +78,6 @@ def with_arrival_partitions(df: DataFrame, ts_col: Column | None = None) -> Data
         .withColumn("day", F.dayofmonth(ts))
         .withColumn("hour", F.hour(ts))
     )
-
-
-def sort_news_batch(df: DataFrame) -> DataFrame:
-    """News batch sort by (published, id) asc with null→0 defaulting
-    (producer_company_news.py:107-120)."""
-    return df.orderBy(
-        F.coalesce(F.col("article_published_unix"), F.lit(0)).asc(),
-        F.coalesce(F.col("news_id"), F.lit(0)).asc(),
-    )
-
-
-def dedup_news_batch(df: DataFrame) -> DataFrame:
-    """Batch form of the high-water dedup: keep the first row per
-    (symbol, news_id); null ids are kept (the reference skips the state
-    check for malformed ids but still forwards valid-shaped articles)."""
-    with_id = df.filter(F.col("news_id").isNotNull()).dropDuplicates(["symbol", "news_id"])
-    without_id = df.filter(F.col("news_id").isNull())
-    return with_id.unionByName(without_id)
 
 
 def quote_pipeline_batch(envelopes: DataFrame) -> DataFrame:

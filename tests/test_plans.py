@@ -830,11 +830,12 @@ def test_orc_scan_pushes_filters_and_prunes_columns(spark, sf_dir):
 def test_scd2_two_windows_one_shuffle(spark, sf_dir):
     """SCD2 build: the change-collapse lag and the interval lead both
     partition by user_id — the filter between them preserves
-    distribution, so the plan carries exactly ONE Exchange for two
-    Window passes (the second pays only a re-sort)."""
+    distribution. On the user_id-bucketed events layout the scan already
+    satisfies that distribution, so neither Window pass shuffles."""
     plan = _plan(spark, sf_dir, "q_scd2_user_segment")
     assert plan.count("- Window (") == 2
-    assert plan.count("- Exchange (") == 1, "second window re-shuffled"
+    assert "Bucketed: true" in plan, "events layout not read"
+    assert _shuffle_exchanges(plan) == 0, "a window re-shuffled"
     assert "rangepartitioning" not in plan
 
 

@@ -51,7 +51,14 @@ def test_quote_pipeline_streaming(spark, tmpdir):
     no_price = _envelope("MSFT", {"t": 1704067200, "symbol": "MSFT"})  # fails validity filter
     bad_json = {"partition_key": "NVDA", "data": base64.b64encode(b'{"c": 5').decode()}
     bad_b64 = {"partition_key": "META", "data": "!!!not-base64!!!"}
-    _write_jsonl(src, "batch1.jsonl", [good, no_price, bad_json, bad_b64])
+    # the base64 guard rejects unpadded input and embedded spaces, which a
+    # lenient decoder (try_to_binary) would accept
+    padded = _envelope("AMZN", {"c": 10.5, "t": 1704067200, "symbol": "AMZN"})
+    assert padded["data"].endswith("==")
+    unpadded = dict(padded, data=padded["data"].rstrip("="))
+    spaced = _envelope("TSLA", {"c": 2.0, "t": 1704067200, "symbol": "TSLA"})
+    spaced["data"] = spaced["data"][:8] + " " + spaced["data"][8:]
+    _write_jsonl(src, "batch1.jsonl", [good, no_price, bad_json, bad_b64, unpadded, spaced])
 
     stream = spark.readStream.schema(ENVELOPE_SCHEMA).json(src)
     out = quote_pipeline_batch(stream)
@@ -70,6 +77,32 @@ def test_quote_pipeline_streaming(spark, tmpdir):
     assert r["current_price"] == 190.5
     assert r["quote_timestamp_unix"] == 1704067200
     assert str(r["quote_timestamp_utc"]).startswith("2024-01-01")
+
+
+def test_quote_decode_runs_once_per_row(spark, tmpdir):
+    """The envelope decode (regex guard + unbase64 + from_json) appears once
+    in the executed plan, batch and streaming: predicate pushdown must not
+    copy it into each validity conjunct."""
+    src = os.path.join(tmpdir, "src")
+    _write_jsonl(src, "b.jsonl", [_envelope("AAPL", {"c": 1.0, "t": 1704067200, "symbol": "AAPL"})])
+
+    def assert_once(plan: str) -> None:
+        assert plan.count("from_json(") == 1, plan
+        assert plan.count("RLIKE(") == 1, plan
+
+    batch = quote_pipeline_batch(spark.read.schema(ENVELOPE_SCHEMA).json(src))
+    assert_once(batch._jdf.queryExecution().executedPlan().toString())
+
+    stream = quote_pipeline_batch(spark.readStream.schema(ENVELOPE_SCHEMA).json(src))
+    q = (
+        stream.writeStream.format("memory")
+        .queryName("quotes_plan")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(60)
+    assert spark.sql("SELECT count(*) FROM quotes_plan").first()[0] == 1
+    assert_once(q._jsq.explainInternal(False))
 
 
 def _news_row(symbol: str, news_id: int, unix: int) -> dict:
